@@ -12,30 +12,40 @@ object Bench {
     * exactly what removes that compile tax from the reported number;
     * only the genuinely-long tail (≥15s steady) skips its repeat. */
   def timeOnce(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Option[Double] = {
     val t0 = System.nanoTime()
     // toRdd.count(), not count(): Dataset.count() collapses to a
     // count(1) agg that elides sorts and expensive projections, which
     // would under-measure; materializing the final InternalRows runs
     // the full physical plan without collecting to the driver.
-    try { fn(spark, sfDir).queryExecution.toRdd.count() }
-    catch { case _: Throwable => -1L }
+    // A query that throws gets no time at all: its time-to-failure
+    // would otherwise read as a fast run.
+    val ok =
+      try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] query failed: $e"); false }
     val dt = (System.nanoTime() - t0) / 1e9
     // drain scratch caches between reps: keeps the rep honest (no
     // free ride on the previous rep's cache) and bounds storage
     Scratch.drain(spark)
-    dt
+    if (ok) Some(dt) else None
   }
 
+  /** Per-query min over the reps. A query that throws on any rep is
+    * left out of the result (and so out of every total); callers list
+    * it as failed. */
   def runSuite(spark: SparkSession, sfDir: String,
       selected: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame],
       reps: Int, repCap: Double): Map[String, Double] =
-    selected.map { case (name, fn) =>
+    selected.flatMap { case (name, fn) =>
       val first = timeOnce(spark, sfDir, fn)
       val times = first +: (2 to reps)
-        .filter(_ => first < repCap).map(_ => timeOnce(spark, sfDir, fn))
-      name -> times.min
+        .filter(_ => first.exists(_ < repCap))
+        .map(_ => timeOnce(spark, sfDir, fn))
+      if (times.forall(_.isDefined)) Some(name -> times.flatten.min)
+      else None
     }
 
   /** Steady-time reference for the outlier retry: SCALING.json's
@@ -77,7 +87,8 @@ object Bench {
     * until nothing stays flagged or maxSweeps runs out, so one more
     * stall DURING the retry pass can't freeze in either. Returns
     * (final times, first-pass raw values of every flagged query —
-    * kept verbatim so contamination stays visible in the report). */
+    * kept verbatim so contamination stays visible in the report). A
+    * query whose retry throws leaves the final times: it failed. */
   def retryOutliers(spark: SparkSession, sfDir: String,
       selected: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame],
@@ -100,8 +111,8 @@ object Bench {
     while (pending.nonEmpty && sweep < maxSweeps) {
       val retried = pending.toSeq.map { q =>
         q -> timeOnce(spark, sfDir, selected(q)) }
-      current = current ++ retried.map { case (q, t) =>
-        q -> math.min(t, current(q)) }
+      current = current -- retried.collect { case (q, None) => q } ++
+        retried.collect { case (q, Some(t)) => q -> math.min(t, current(q)) }
       pending = flaggedIn(current.view.filterKeys(pending).toMap)
       sweep += 1
     }
@@ -110,6 +121,12 @@ object Bench {
 
   private def jsonMap(m: Iterable[(String, Double)]): String =
     m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** Queries of `selected` with no time: they threw. */
+  private def failedJson(selected: Iterable[String],
+      timed: Map[String, Double]*): String =
+    selected.filterNot(q => timed.forall(_.contains(q))).toSeq.sorted
+      .map(q => "\"" + q + "\"").mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -184,8 +201,9 @@ object Bench {
       val (tBig, _) = retryOutliers(spark, big, selected,
         runSuite(spark, big, selected, reps, repCap), repCap,
         steadyTimes(big)._1)
-      val ratios = selected.keys.toSeq.sorted.map { q =>
-        q -> tBig(q) / math.max(tSmall(q), 1e-9) }
+      val ratios = selected.keys.toSeq.sorted
+        .filter(q => tSmall.contains(q) && tBig.contains(q))
+        .map(q => q -> tBig(q) / math.max(tSmall(q), 1e-9))
       val flagged = ratios.filter { case (q, r) =>
         r > threshold && tSmall(q) >= floorSec }
       val json =
@@ -194,7 +212,8 @@ object Bench {
           s""""t_small":${jsonMap(tSmall.toSeq.sortBy(_._1))},""" +
           s""""t_big":${jsonMap(tBig.toSeq.sortBy(_._1))},""" +
           s""""ratio":${jsonMap(ratios)},""" +
-          s""""flagged":${jsonMap(flagged)}}"""
+          s""""flagged":${jsonMap(flagged)},""" +
+          s""""failed":${failedJson(selected.keys, tSmall, tBig)}}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("SCALING.json"), json + "\n")
       println(s"""{"metric":"scaling_flagged","value":${flagged.size},""" +
@@ -208,6 +227,9 @@ object Bench {
     val (results, flaggedRaw) =
       retryOutliers(spark, sfDir, selected, raw, repCap, steady)
     val qs = jsonMap(results)
+    // throwing queries have no entry in `results`: they are listed
+    // here and add nothing to the total
+    val failed = failedJson(selected.keys, results)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // "retried" records the pre-retry raw value of every flagged query
     // so a stall-poisoned first pass stays visible in the report;
@@ -225,7 +247,7 @@ object Bench {
     val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
       s""""queries":$qs,"retried":${jsonMap(flaggedRaw.toSeq.sortBy(_._1))},""" +
       s""""steady_ratio":${jsonMap(ratios)},""" +
-      s""""steady_ref":"$steadyNote","sf":"$sfDir"}"""
+      s""""steady_ref":"$steadyNote","failed":$failed,"sf":"$sfDir"}"""
     // The driver captures a bounded tail of stdout: a ~4KB 104-query
     // line can get its head (and the total) truncated away, which is
     // exactly what nulled BENCH_r02's parse. So (a) persist the full
@@ -240,7 +262,7 @@ object Bench {
       catch { case _: Throwable => () }
     println(full)
     val slowest = jsonMap(results.toSeq.sortBy(-_._2).take(5))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$slowest,"sf":"$sfDir","full":"BENCH_FULL.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$slowest,"failed":$failed,"sf":"$sfDir","full":"BENCH_FULL.json"}""")
     spark.stop()
   }
 }

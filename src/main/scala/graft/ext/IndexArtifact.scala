@@ -48,8 +48,8 @@ import org.apache.spark.sql.functions._
   * int64-safe to ~1.4e11 vectors; codes/cids are small integers.
   */
 object IndexArtifact {
-  import Similarity.{Dim, IvfK, NProbe, NQueries, PqGrid, PqK, PqM,
-    PqRounds, PqSub, TopK}
+  import Similarity.{Dim, IvfK, NProbe, NQueries, TopK}
+  import Pq.{PqGrid, PqK, PqM, PqRounds, PqSub}
 
   /** Bump when the on-disk layout or training protocol changes — a
     * stale artifact from an older protocol must never serve. */
@@ -170,26 +170,15 @@ object IndexArtifact {
     * frozen arm): nearest coarse centroid, residual, one PQ code per
     * subspace. At 100 TB this one batch-sized scan IS the entire
     * maintenance cost of the frozen index. */
-  private[graft] def encodeUnder(cents: Array[(Long, Seq[Double])],
-      books: Seq[Seq[(Long, Seq[Double])]], e: DataFrame): DataFrame = {
-    val centMap = typedlit(cents.toMap)
-    // fused encode: the residual (x − centroid[cid]) subtracts INSIDE
-    // the per-subspace argmin kernel — no zip_with rv column, no
-    // slice/struct-sort per row; bit-equal to the idiom it replaces
-    // (same two subtractions in the same order — NearestL2Code doc)
-    val assigned = e
-      .withColumn("cid", Similarity.ivfAssign(cents.toSeq, col("x")))
-    val codes = (0 until PqM).map { s =>
-      graft.functions.NearestL2Code.nearest_l2_code_residual(
-        col("x"), element_at(centMap, col("cid")), s * PqSub, books(s))
-        .as(s"c$s")
-    }
-    assigned.select(Seq(col("vec_id"), col("cid")) ++ codes: _*)
-  }
+  private[graft] def encodeUnder(cents: Pq.Cents, books: Seq[Pq.Book],
+      e: DataFrame): DataFrame =
+    e.withColumn("cid", Similarity.ivfAssign(cents.toSeq, col("x")))
+      .select(Seq(col("vec_id"), col("cid")) ++
+        Pq.encode(col("x"), Pq.centroid(cents), books, Pq.Raw): _*)
 
   /** Collect a generation's broadcast-sized quantizers. */
   private[ext] def readQuantizers(spark: SparkSession, dir: String)
-      : (Array[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) = {
+      : (Pq.Cents, Seq[Pq.Book]) = {
     val cents = spark.read.parquet(s"$dir/centroids")
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq)
       .sortBy(_._1)
@@ -204,7 +193,7 @@ object IndexArtifact {
   /** Collect the persisted broadcast-sized quantizers of the CURRENT
     * generation (ensuring it first). */
   private[graft] def loadQuantizers(spark: SparkSession, sfDir: String)
-      : (Array[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) =
+      : (Pq.Cents, Seq[Pq.Book]) =
     readQuantizers(spark, currentDir(spark, sfDir))
 
   /** Read an encoded table (one or more of standing/arrival dirs),
@@ -221,67 +210,28 @@ object IndexArtifact {
     paths.map { p =>
       spark.read.parquet(p)
         .select(Seq(col("vec_id"), col("cid").cast("long").as("cid")) ++
-          (0 until PqM).map(s => col(s"c$s")): _*)
+          Pq.codeCols(Pq.Raw): _*)
     }.reduce(_ unionByName _)
 
   /** Train q273's raw arm over the (already normalized) corpus `e0`
-    * and write the four artifact tables into `dir` — the encoded
-    * corpus PARTITIONED BY COARSE LIST ID, so a serving read prunes
-    * to the probed lists at the DIRECTORY level (round-12 verdict #1:
-    * `scanned_rows` must be the plan's actual read, not a model).
-    * Deterministic: same corpus → same bytes. */
-  private def buildInto(e0: DataFrame, dir: String): Unit = {
-    val spark = e0.sparkSession
-    val e = e0.localCheckpoint()
+    * and write the four artifact tables into `dir` (see
+    * [[writeGeneration]]). Deterministic: same corpus → same bytes. */
+  private def buildInto(e0: DataFrame, dir: String): Unit =
+    writeGeneration(e0.localCheckpoint(), dir)
+
+  /** Train q273's raw-arm quantizers over the checkpointed normalized
+    * corpus `e` and write the generation's four tables: centroids,
+    * books, the encoded corpus PARTITIONED BY COARSE LIST ID (a serving
+    * read prunes to the probed lists at the DIRECTORY level — round-12
+    * verdict #1: `scanned_rows` must be the plan's actual read, not a
+    * model) and the forward vectors. */
+  private def writeGeneration(e: DataFrame, dir: String): Unit = {
+    val spark = e.sparkSession
     val cents = Similarity.ivfCodebook(e)
-    val centMap = typedlit(cents.toMap)
-    val assigned = e
-      .withColumn("cid", Similarity.ivfAssign(cents.toSeq, col("x")))
-      .withColumn("rv",
-        zip_with(col("x"), element_at(centMap, col("cid")),
-          (a, b) => a - b))
-      .localCheckpoint()
     // PQ residual training — q273's one-Lloyd-job discipline verbatim
-    val seedRows = assigned.filter(col("vec_id") < PqK)
-      .select(col("vec_id"), col("rv"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-      .sortBy(_._1).toSeq
-    var books: Seq[Seq[(Long, Seq[Double])]] = (0 until PqM).map { s =>
-      seedRows.map { case (cid, rv) =>
-        cid -> rv.slice(s * PqSub, s * PqSub + PqSub).toSeq }
-    }
-    for (_ <- 1 to PqRounds) {
-      val subs = (0 until PqM).map { s =>
-        // codegen'd argmin over the rv window (no slice/struct/sort
-        // allocations — bit-equal to the struct-sort nearestL2); the
-        // sv slice stays for the posexplode payload only
-        struct(lit(s).as("s"),
-          graft.functions.NearestL2Code.nearest_l2_code(
-            col("rv"), s * PqSub, books(s)).as("cid"),
-          slice(col("rv"), s * PqSub + 1, PqSub).as("sv"))
-      }
-      val stats = assigned.select(explode(array(subs: _*)).as("sub"))
-        .select(col("sub.s").as("s"), col("sub.cid").as("cid"),
-          posexplode(col("sub.sv")).as(Seq("i", "x")))
-        .groupBy("s", "cid", "i")
-        .agg(sum(round(col("x") * Similarity.PqGrid, 0).cast("long"))
-          .as("sx"), count(lit(1)).as("n"))
-        .collect()
-      books = (0 until PqM).map { s =>
-        stats.filter(_.getInt(0) == s).groupBy(_.getLong(1))
-          .map { case (cid, rows) =>
-            cid -> rows.sortBy(_.getInt(2))
-              .map(r => r.getLong(3).toDouble
-                / (r.getLong(4) * Similarity.PqGrid)).toSeq
-          }.toSeq.sortBy(_._1)
-      }
-    }
-    val codes = (0 until PqM).map { s =>
-      // rv is checkpoint-materialized here; the window kernel reads it
-      // in place (no slice/struct-sort per row, bit-equal)
-      graft.functions.NearestL2Code.nearest_l2_code(
-        col("rv"), s * PqSub, books(s)).as(s"c$s")
-    }
+    val books = Pq.train(
+      Seq(Pq.Arm("raw", Pq.residual(cents, e).localCheckpoint(), Pq.Raw)),
+      Pq.byL2)("raw")
     import spark.implicits._
     // the four table writes are independent given the checkpointed
     // inputs and the collected quantizer literals — submit them from
@@ -296,7 +246,7 @@ object IndexArtifact {
         .flatMap { case (b, s) => b.map { case (cid, cv) => (s, cid, cv) } }
         .toDF("s", "cid", "cv")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/books"),
-      () => assigned.select(Seq(col("vec_id"), col("cid")) ++ codes: _*)
+      () => encodeUnder(cents, books, e)
         .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/encoded"),
       () => e.write.mode("overwrite").parquet(s"$dir/forward"))
   }
@@ -361,7 +311,7 @@ object IndexArtifact {
         col("s").cast("long") * 4096L + col("cid"), vecE6(col("cv")),
         lit(0L)))
       .unionByName(census(enc, "encoded", col("vec_id"),
-        (0 until PqM).map(s => col(s"c$s")).reduce(_ + _), col("cid")))
+        Pq.codeCols(Pq.Raw).reduce(_ + _), col("cid")))
       .unionByName(census(fwd, "forward", col("vec_id"), vecE6(col("x")),
         lit(0L)))
       .orderBy("component")
@@ -390,7 +340,6 @@ object IndexArtifact {
       qpred: Column = col("vec_id") < NQueries): DataFrame = {
     val dir = currentDir(spark, sfDir)
     val (cents, books) = readQuantizers(spark, dir)
-    val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = spark.read.parquet(s"$dir/forward")
     val enc = readEncoded(spark, s"$dir/encoded")
@@ -403,25 +352,15 @@ object IndexArtifact {
           s => -s("ncid"))).as(Seq("pp", "pcid")))
       .select(col("query_id"), col("pcid"),
         (col("pp") + 1).cast("long").as("prank"))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
+    val adc = Pq.adc(col("qx"), books, Pq.Raw, Some(Pq.centroid(cents)))
     enc.join(fwd.withColumnRenamed("vec_id", "fid"),
         col("vec_id") === col("fid"))
       .select(Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-        col("cid")) ++ (0 until PqM).map(s => col(s"c$s")): _*)
+        col("cid")) ++ Pq.codeCols(Pq.Raw): _*)
       .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("cid"),
         Similarity.cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
+        adc.as("adc"))
       .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
         col("query_id") === col("p_qid") && col("cid") === col("pcid"),
         "left_outer")
@@ -619,7 +558,7 @@ object IndexArtifact {
     *     bounded NQueries × IvfK computation), and collect the probed
     *     list ids — (NQueries × NProbe)-bounded BY CONSTRUCTION.
     *  2. READ — scan ONLY those lists: the encoded corpus is
-    *     partitioned by `cid` ([[buildInto]]), and the probed ids
+    *     partitioned by `cid` ([[writeGeneration]]), and the probed ids
     *     become a LITERAL IN filter, so the parquet scan's
     *     PartitionFilters prune to the probed directories
     *     (spec-pinned). The rows this query touches are the rows the
@@ -639,7 +578,6 @@ object IndexArtifact {
   def indexServePruned(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = currentDir(spark, sfDir)
     val (cents, books) = readQuantizers(spark, dir)
-    val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = spark.read.parquet(s"$dir/forward")
     val qs = fwd.filter(col("vec_id") < NQueries)
@@ -655,23 +593,13 @@ object IndexArtifact {
       .collect().map(_.getLong(0)).sorted
     val enc = readEncoded(spark, s"$dir/encoded")
       .filter(col("cid").isin(probedCids: _*))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
+    val adc = Pq.adc(col("qx"), books, Pq.Raw, Some(Pq.centroid(cents)))
     enc
       .join(broadcast(probes), col("cid") === col("pcid"))
       .join(broadcast(qs), Seq("query_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cid"), adcTerms.reduceLeft(_ + _).as("adc"))
+        col("cid"), adc.as("adc"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
@@ -732,63 +660,8 @@ object IndexArtifact {
   private def buildStandingInto(spark: SparkSession, sfDir: String)
       : (DataFrame, String) => Unit = { (e0, dir) =>
     val width = ingestWidth(spark, sfDir)
-    val e = e0.localCheckpoint()
-    val standing = e.filter(
-      expr(s"vec_id div $width") < Similarity.DriftBatches - 1)
-    val cents = Similarity.ivfCodebook(standing)
-    val centMap = typedlit(cents.toMap)
-    val assigned = standing
-      .withColumn("cid", Similarity.ivfAssign(cents.toSeq, col("x")))
-      .withColumn("rv",
-        zip_with(col("x"), element_at(centMap, col("cid")),
-          (a, b) => a - b))
-      .localCheckpoint()
-    val seedRows = assigned.filter(col("vec_id") < PqK)
-      .select(col("vec_id"), col("rv"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-      .sortBy(_._1).toSeq
-    var books: Seq[Seq[(Long, Seq[Double])]] = (0 until PqM).map { s =>
-      seedRows.map { case (cid, rv) =>
-        cid -> rv.slice(s * PqSub, s * PqSub + PqSub).toSeq }
-    }
-    for (_ <- 1 to PqRounds) {
-      val subs = (0 until PqM).map { s =>
-        // codegen'd argmin over the rv window (no slice/struct/sort
-        // allocations — bit-equal to the struct-sort nearestL2); the
-        // sv slice stays for the posexplode payload only
-        struct(lit(s).as("s"),
-          graft.functions.NearestL2Code.nearest_l2_code(
-            col("rv"), s * PqSub, books(s)).as("cid"),
-          slice(col("rv"), s * PqSub + 1, PqSub).as("sv"))
-      }
-      val stats = assigned.select(explode(array(subs: _*)).as("sub"))
-        .select(col("sub.s").as("s"), col("sub.cid").as("cid"),
-          posexplode(col("sub.sv")).as(Seq("i", "x")))
-        .groupBy("s", "cid", "i")
-        .agg(sum(round(col("x") * Similarity.PqGrid, 0).cast("long"))
-          .as("sx"), count(lit(1)).as("n"))
-        .collect()
-      books = (0 until PqM).map { s =>
-        stats.filter(_.getInt(0) == s).groupBy(_.getLong(1))
-          .map { case (cid, rows) =>
-            cid -> rows.sortBy(_.getInt(2))
-              .map(r => r.getLong(3).toDouble
-                / (r.getLong(4) * Similarity.PqGrid)).toSeq
-          }.toSeq.sortBy(_._1)
-      }
-    }
-    import spark.implicits._
-    // independent writes, concurrent (see buildInto's awaitAll note)
-    awaitAll(
-      () => cents.toSeq.toDF("cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => books.zipWithIndex
-        .flatMap { case (b, s) => b.map { case (cid, cv) => (s, cid, cv) } }
-        .toDF("s", "cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/books"),
-      () => encodeUnder(cents, books, standing)
-        .write.partitionBy("cid").mode("overwrite").parquet(s"$dir/encoded"),
-      () => standing.write.mode("overwrite").parquet(s"$dir/forward"))
+    writeGeneration(e0.localCheckpoint()
+      .filter(expr(s"vec_id div $width") < Similarity.DriftBatches - 1), dir)
   }
 
   /** q280 — merge-and-serve: encode the arrival batch under the
@@ -813,7 +686,6 @@ object IndexArtifact {
       () => arrival.write.mode("overwrite")
         .parquet(s"$dir/forward_arrival"))
 
-    val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = spark.read.parquet(s"$dir/forward", s"$dir/forward_arrival")
     val enc = readEncoded(spark, s"$dir/encoded", s"$dir/encoded_arrival")
@@ -828,26 +700,16 @@ object IndexArtifact {
         explode(transform(
           slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
           s => -s("ncid"))).as("pcid"))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
+    val adc = Pq.adc(col("qx"), books, Pq.Raw, Some(Pq.centroid(cents)))
     val k = TopK.toLong
     enc.join(fwd.withColumnRenamed("vec_id", "fid"),
         col("vec_id") === col("fid"))
       .select(Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-        col("cid")) ++ (0 until PqM).map(s => col(s"c$s")): _*)
+        col("cid")) ++ Pq.codeCols(Pq.Raw): _*)
       .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("cid"),
         Similarity.cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
+        adc.as("adc"))
       .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
         col("query_id") === col("p_qid") && col("cid") === col("pcid"),
         "left_outer")
@@ -923,7 +785,7 @@ object IndexArtifact {
         .write.mode("append").parquet(parts)
     }
     graft.etl.Layout.compactPartitioned(spark, parts, compacted, "cid")
-    val codeSum = (0 until PqM).map(s => col(s"c$s")).reduce(_ + _)
+    val codeSum = Pq.codeCols(Pq.Raw).reduce(_ + _)
     census(spark.read.parquet(parts), "arrival_parts", col("vec_id"),
         codeSum, col("cid"))
       .unionByName(census(readEncoded(spark, compacted),

@@ -22,10 +22,11 @@ import org.apache.spark.sql.expressions.Window
   * round cosine to 6 dp as belt-and-braces against summation-order noise.
   */
 object Similarity {
+  import Pq.{PqGrid, PqK, PqM, PqRounds, PqSub}
 
   val TopK = 10
   val NQueries = 8
-  val Dim = 64
+  final val Dim = 64
 
   /** Quantization scale for the exact covariance matrix (q210). A
     * power of two, so float → double × 1024 is EXACT (no rounding
@@ -1003,31 +1004,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** PQ geometry for q111: M subspaces of Dim/M dims, K centroids per
-    * subspace, `PqRounds` Lloyd rounds each, trained on the NORMALIZED
-    * corpus so inner product ≡ cosine and ADC ranks like q13. K stays
-    * 16 (a 4-bit code) and the whole codebook is M·K·(Dim/M) = 1024
-    * doubles — the classic 64-dim→8-byte compression. */
-  val PqM = 8
-  val PqK = 16
-  val PqRounds = 1
-  private[ext] val PqSub = Dim / PqM
-
-  /** Integer grid for the PQ Lloyd book means — the [[IvfGrid]]
-    * doctrine applied to the residual/subvector books (round-12
-    * verdict #4): per (subspace, cluster, dim) the mean is
-    * Σ round(x·1e6) folded as an exact BIGINT (associative and
-    * order-free on BOTH engines), divided once by n·1e6 at the edge.
-    * Components are ≤ 2 in magnitude after normalization, so the
-    * per-cluster sum stays inside int64 to ~4.6e12 members. The books
-    * feed discrete code assignments AND (since q277) an e6-grid value
-    * census that the oracle hash compares, so their VALUES must be
-    * bit-identical across engines and thread schedules — the float
-    * AVG this replaces was empirically stable (12 rounds of clean
-    * thread sweeps) but doctrinally exempt; now the whole PQ family
-    * rides the same exact fold as [[ivfCodebook]]. */
-  val PqGrid = 1e6
-
   /** q111 — product-quantization ANN with asymmetric-distance (ADC)
     * scoring: train a k-means codebook PER SUBSPACE (the q108 kernel on
     * sliced vectors), encode every vector as M small codes, and score
@@ -1060,64 +1036,20 @@ object Similarity {
       .localCheckpoint()
     // all M subspace codebooks train TOGETHER: one seed collect and one
     // Lloyd-stats job per round cover every subspace (vs M×3 jobs when
-    // each slice trains alone — measured 2.5× on q111). Semantics are
-    // kmeansCodebook's exactly: same nearest() tiebreak, same mean
-    // update, clusters that empty out drop from that subspace's book.
-    val seedRows = e.filter(col("vec_id") < PqK)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-      .sortBy(_._1).toSeq
-    var books: Seq[Seq[(Long, Seq[Double])]] = (0 until PqM).map { s =>
-      seedRows.map { case (cid, v) =>
-        cid -> v.slice(s * PqSub, s * PqSub + PqSub).toSeq }
-    }
-    for (_ <- 1 to PqRounds) {
-      val subs = (0 until PqM).map { s =>
-        // offset-window argmax kernel: cosine over v's [s·sub, (s+1)·sub)
-        // window directly — no per-row slice allocation for the argmax
-        // (bit-equal to ivfAssign ∘ slice: same fold, same NaN-first
-        // strict-greater tiebreak); the sv slice stays for the
-        // posexplode payload only
-        struct(lit(s).as("s"),
-          graft.functions.NearestCosineCentroid.nearest_cos_centroid_off(
-            col("v"), s * PqSub, books(s)).as("cid"),
-          slice(col("v"), s * PqSub + 1, PqSub).as("sv"))
-      }
-      val stats = e.select(explode(array(subs: _*)).as("sub"))
-        .select(col("sub.s").as("s"), col("sub.cid").as("cid"),
-          posexplode(col("sub.sv")).as(Seq("i", "x")))
-        .groupBy("s", "cid", "i")
-        .agg(sum(round(col("x") * PqGrid, 0).cast("long")).as("sx"),
-          count(lit(1)).as("n"))
-        .collect()
-      books = (0 until PqM).map { s =>
-        stats.filter(_.getInt(0) == s).groupBy(_.getLong(1))
-          .map { case (cid, rows) =>
-            cid -> rows.sortBy(_.getInt(2))
-              .map(r => r.getLong(3).toDouble / (r.getLong(4) * PqGrid)).toSeq
-          }.toSeq.sortBy(_._1)
-      }
-    }
-    val codes = (0 until PqM).map { s =>
-      graft.functions.NearestCosineCentroid.nearest_cos_centroid_off(
-        col("v"), s * PqSub, books(s)).as(s"c$s")
-    }
-    val enc = e.select(col("vec_id") +: codes: _*)
+    // each slice trains alone — measured 2.5× on q111). Assignment is
+    // kmeansCodebook's cosine argmax over each subspace window (same
+    // NaN-first strict-greater tiebreak as ivfAssign ∘ slice).
+    val cos: Pq.Nearest =
+      graft.functions.NearestCosineCentroid.nearest_cos_centroid_off
+    val train = e.select(col("vec_id"), col("v").as("rv"))
+    val books = Pq.train(Seq(Pq.Arm("q111", train, Pq.Raw)), cos)("q111")
+    val enc = e.select(
+      col("vec_id") +: Pq.codes(col("v"), books, Pq.Raw, cos): _*)
     val queries = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    // native dot kernel (ascending-index left-assoc fold, bit-equal to
-    // the HOF form — SimilaritySpec) keeps the corpus-sized ADC scoring
-    // pass inside whole-stage codegen instead of interpreting a lambda
-    // per element (guide §4: built-ins/codegen expressions in hot paths)
-    val terms = (0 until PqM).map { s =>
-      // offset-dot kernel: no per-(pair × subspace) slice allocation on
-      // the corpus × queries scoring scan (same fold, bit-equal)
-      graft.functions.DotProductOffset.dot_product_off(
-        col("qv"), s * PqSub,
-        element_at(typedlit(books(s).toMap), col(s"c$s")))
-    }
     enc.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        terms.reduceLeft(_ + _).as("acos"))
+        Pq.adc(col("qv"), books, Pq.Raw).as("acos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("acos").desc, col("neighbor_id"))).cast("long"))
@@ -4026,87 +3958,7 @@ object Similarity {
     * dim-reduced copy. */
   val PqMWhite = 2
   private[ext] val PqSubWhite = WhitenK / PqMWhite
-
-  /** Nearest sub-codeword by SQUARED L2 (ascending, ties to the
-    * smallest cid) — the residual-PQ metric. Cosine (q111's whole-
-    * vector metric) is undefined on the zero vector, and residuals
-    * contain exact zeros BY CONSTRUCTION (every IVF centroid's own
-    * residual): the first draft trained residual books with cosine
-    * and the NaN ordering diverged between engines (Spark ranks NaN
-    * greatest, DuckDB orders the NULL-ish result last) — every code
-    * wrong. Squared L2 is total on all finite inputs, matches the
-    * IVFADC formulation (Jégou et al.), and the in-order fold is
-    * bit-equal across engines. */
-  private[ext] def nearestL2(v: Column, code: Seq[(Long, Seq[Double])]): Column =
-    sort_array(array(code.map { case (cid, cv) =>
-      struct(sqDist(v, typedlit(cv)).as("d"), lit(cid).as("cid"))
-    }: _*), asc = true)(0)("cid")
-
-  /** Batched residual-PQ book trainer over tagged (vec_id, rv) frames:
-    * per tag the EXACT q273/q276 fold — literal seeds from the first
-    * [[PqK]] residuals, then per Lloyd round one nearest-L2 assignment
-    * + integer-grid mean per (subspace, code, dim) — but the seed
-    * collect and each round's stats collect cover ALL tags as ONE
-    * tagged-union Spark job, so a two-space/two-arm query pays 2
-    * driver round-trips instead of 4 and the per-tag stages run
-    * concurrently inside one job (guide §1.2 / §2.6). Per-tag values
-    * are bit-identical to the sequential trainer: every group key
-    * carries its tag and the grid sums are order-free BIGINT folds. */
-  private[ext] def pqBooksBatch(
-      arms: Seq[(String, DataFrame, Int, Int)])
-      : Map[String, Seq[Seq[(Long, Seq[Double])]]] = {
-    val seedRows = arms.map { case (tag, tr, _, _) =>
-      tr.filter(col("vec_id") < PqK)
-        .select(lit(tag).as("tag"), col("vec_id"), col("rv"))
-    }.reduce(_ unionAll _).collect()
-    val seedsBy = arms.map { case (tag, _, _, _) =>
-      tag -> seedRows.filter(_.getString(0) == tag)
-        .map(r => r.getLong(1) -> r.getSeq[Double](2))
-        .sortBy(_._1).toSeq
-    }.toMap
-    var booksBy: Map[String, Seq[Seq[(Long, Seq[Double])]]] =
-      arms.map { case (tag, _, m, sub) =>
-        tag -> (0 until m).map { s =>
-          seedsBy(tag).map { case (cid, rv) =>
-            cid -> rv.slice(s * sub, s * sub + sub).toSeq }
-        }
-      }.toMap
-    for (_ <- 1 to PqRounds) {
-      val stats = arms.map { case (tag, tr, m, sub) =>
-        val books = booksBy(tag)
-        // codegen'd argmin kernel over the rv window (no slice/struct/
-        // sort allocations — bit-equal to the struct-sort nearestL2,
-        // measured 2.3× on this stats job); the sv slice stays for the
-        // posexplode payload only
-        val subs = (0 until m).map { s =>
-          struct(lit(s).as("s"),
-            graft.functions.NearestL2Code.nearest_l2_code(
-              col("rv"), s * sub, books(s)).as("cid"),
-            slice(col("rv"), s * sub + 1, sub).as("sv"))
-        }
-        tr.select(explode(array(subs: _*)).as("sub"))
-          .select(col("sub.s").as("s"), col("sub.cid").as("cid"),
-            posexplode(col("sub.sv")).as(Seq("i", "x")))
-          .groupBy("s", "cid", "i")
-          .agg(sum(round(col("x") * PqGrid, 0).cast("long")).as("sx"),
-            count(lit(1)).as("n"))
-          .select(lit(tag).as("tag"), col("s"), col("cid"), col("i"),
-            col("sx"), col("n"))
-      }.reduce(_ unionAll _).collect()
-      booksBy = arms.map { case (tag, _, m, _) =>
-        val mine = stats.filter(_.getString(0) == tag)
-        tag -> (0 until m).map { s =>
-          mine.filter(_.getInt(1) == s).groupBy(_.getLong(2))
-            .map { case (cid, rows) =>
-              cid -> rows.sortBy(_.getInt(3))
-                .map(r => r.getLong(4).toDouble / (r.getLong(5) * PqGrid))
-                .toSeq
-            }.toSeq.sortBy(_._1)
-        }
-      }.toMap
-    }
-    booksBy
-  }
+  private val WhiteSpace = Pq.Space(PqMWhite, PqSubWhite, WhitenK)
 
   /** q273 — IVF-PQ recall-vs-scan audit, raw vs whitened: per query
     * and space, an IVF index (q25/q269's trained fixed-K codebook)
@@ -4180,23 +4032,15 @@ object Similarity {
     // (seed + Lloyd stats) and their PQ books likewise (seed + stats)
     // — 4 driver round-trips for both spaces instead of 8, identical
     // per-space folds and values
-    val spaces: Seq[(String, String, Int, Int)] =
-      ("raw", "vn", PqM, PqSub) +:
-        (if (!degenerate) Seq(("white", "wn", PqMWhite, PqSubWhite))
-         else Nil)
-    val eBy = spaces.map { case (tag, xcol, _, _) =>
+    val spaces: Seq[(String, String, Pq.Space)] =
+      ("raw", "vn", Pq.Raw) +:
+        (if (!degenerate) Seq(("white", "wn", WhiteSpace)) else Nil)
+    val eBy = spaces.map { case (tag, xcol, _) =>
       tag -> base.filter(col(xcol).isNotNull)
         .select(col("vec_id"), col(xcol).as("x"))
     }.toMap
-    val cbs = ivfCodebooks(spaces.map { case (tag, _, _, _) =>
+    val cbs = ivfCodebooks(spaces.map { case (tag, _, _) =>
       tag -> eBy(tag) })
-    def assignOn(src: DataFrame, tag: String): DataFrame = {
-      val centMap = typedlit(cbs(tag).toMap)
-      src.withColumn("cid", ivfAssign(cbs(tag).toSeq, col("x")))
-        .withColumn("rv",
-          zip_with(col("x"), element_at(centMap, col("cid")),
-            (a, b) => a - b))
-    }
     // PQ residual training: literal seeds (first PqK residuals), then
     // ONE Lloyd-stats job covering every subspace AND space (q111).
     // Trainer collects read the NARROW corpus (the fan-out exchange
@@ -4204,30 +4048,20 @@ object Similarity {
     // the audit-side encode/scoring reads the WIDENED corpus so the
     // big map stage (corpus × queries, cosine + ADC + windows) runs
     // on every core.
-    val booksBy = pqBooksBatch(spaces.map { case (tag, _, m, sub) =>
-      (tag, assignOn(eBy(tag), tag), m, sub) })
+    val booksBy = Pq.train(spaces.map { case (tag, _, space) =>
+      Pq.Arm(tag, Pq.residual(cbs(tag), eBy(tag)), space) }, Pq.byL2)
 
-    def spaceAudit(tag: String, m: Int, sub: Int): DataFrame = {
+    def spaceAudit(tag: String, space: Pq.Space): DataFrame = {
       val e = eBy(tag)
       val cents = cbs(tag)
-      val centMap = typedlit(cents.toMap)
       def scores(c: Column): Column = ivfScores(cents, c)
       val books = booksBy(tag)
-      // fused encode: the residual (x − centroid[cid]) subtracts INSIDE
-      // the argmin kernel per subspace window — no zip_with rv
-      // materialization, no slice/struct-sort per row; bit-equal to the
-      // assignOn + nearestL2∘slice chain it replaces (same two
-      // subtractions in the same order — NearestL2Code doc)
-      val codes = (0 until m).map { s =>
-        graft.functions.NearestL2Code.nearest_l2_code_residual(
-          col("x"), element_at(centMap, col("cid")), s * sub, books(s))
-          .as(s"c$s")
-      }
       val enc = widen(e)
         .withColumn("cid", ivfAssign(cents.toSeq, col("x")))
         .select(
           Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-            col("cid")) ++ codes: _*)
+            col("cid")) ++
+            Pq.encode(col("x"), Pq.centroid(cents), books, space): _*)
       val qs = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("x").as("qx"))
       val probes = e.filter(col("vec_id") < NQueries)
@@ -4235,25 +4069,13 @@ object Similarity {
           explode(transform(
             slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
             s => -s("ncid"))).as("pcid"))
-      // ADC: exact coarse term + M compressed residual terms, added
-      // coarse-first then ascending subspace (left-assoc both engines);
-      // native dot kernel = same ascending fold, whole-stage codegen'd
-      val adcTerms =
-        graft.functions.DotProduct.dot_product(
-          col("qx"), element_at(centMap, col("cid"))) +:
-        (0 until m).map { s =>
-          // offset-dot kernel: no per-(pair × subspace) slice
-          // allocation on the scoring scan (same fold, bit-equal)
-          graft.functions.DotProductOffset.dot_product_off(
-            col("qx"), s * sub,
-            element_at(typedlit(books(s).toMap), col(s"c$s")))
-        }
       val k = TopK.toLong
       val scored = enc
         .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"), col("cid"),
           cosine(col("qx"), col("cx")).as("cos"),
-          adcTerms.reduceLeft(_ + _).as("adc"))
+          Pq.adc(col("qx"), books, space, Some(Pq.centroid(cents)))
+            .as("adc"))
         .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
           col("query_id") === col("p_qid") && col("cid") === col("pcid"),
           "left_outer")
@@ -4276,9 +4098,9 @@ object Similarity {
           round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
             .as("recall"))
     }
-    val raw = spaceAudit("raw", PqM, PqSub)
+    val raw = spaceAudit("raw", Pq.Raw)
     val white =
-      if (!degenerate) spaceAudit("white", PqMWhite, PqSubWhite)
+      if (!degenerate) spaceAudit("white", WhiteSpace)
       else embs.filter(col("vec_id") < NQueries)
         .select(lit("white").as("space"), col("vec_id").as("query_id"),
           lit(null).cast("long").as("scanned_rows"),
@@ -4305,9 +4127,9 @@ object Similarity {
       def lo(s: Int) = s * sub + 1
       def hi(s: Int) = (s + 1) * sub
       // residual-PQ assignment metric: squared L2 ascending (in-order
-      // fold — bit-equal to the Scala sqDist), ties to the smallest
-      // cid; cosine is undefined on the exact-zero residuals every
-      // IVF centroid produces (see nearestL2)
+      // fold — bit-equal to the NearestL2Code kernel), ties to the
+      // smallest cid; cosine is undefined on the exact-zero residuals
+      // every IVF centroid produces (see Pq.byL2)
       def sqd(a: String, b: String) =
         s"""list_sum(list_transform(range($sub),
            |               j -> ($a[j + 1] - $b[j + 1])
@@ -4871,44 +4693,28 @@ object Similarity {
     // — measured); the audit-side encode/scoring stage is the big
     // map (corpus × query cohort, cosine + ADC + two windows), so it
     // reads the WIDENED corpus and runs on every core.
-    def assignOn(src: DataFrame, tag: String): DataFrame = {
-      val centMap = typedlit(cbs(tag).toMap)
-      src.withColumn("cid", ivfAssign(cbs(tag).toSeq, col("x")))
-        .withColumn("rv",
-          zip_with(col("x"), element_at(centMap, col("cid")),
-            (a, b) => a - b))
-    }
     val eW = widen(e)
-    val booksBy = pqBooksBatch(arms.map { case (tag, train) =>
-      (tag,
-        assignOn(e, tag).join(train.select(col("vec_id")),
+    val booksBy = Pq.train(arms.map { case (tag, train) =>
+      Pq.Arm(tag,
+        Pq.residual(cbs(tag), e).join(train.select(col("vec_id")),
           Seq("vec_id"), "left_semi"),
-        PqM, PqSub)
-    })
+        Pq.Raw)
+    }, Pq.byL2)
     arms.map { case (tag, _) =>
       tag -> maintainArmAudit(e, qsel, cbs(tag), booksBy(tag), eW, tag)
     }.toMap
   }
 
   private def maintainArmAudit(e: DataFrame, qsel: DataFrame,
-      cents: Array[(Long, Seq[Double])],
-      books: Seq[Seq[(Long, Seq[Double])]],
+      cents: Pq.Cents, books: Seq[Pq.Book],
       eWide: DataFrame, tag: String): DataFrame = {
-    val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = ivfScores(cents, c)
-    // fused encode over the widened corpus: residual subtraction rides
-    // INSIDE the per-subspace argmin kernel (no zip_with rv column, no
-    // slice/struct-sort per row — bit-equal, see NearestL2Code)
-    val codes = (0 until PqM).map { s =>
-      graft.functions.NearestL2Code.nearest_l2_code_residual(
-        col("x"), element_at(centMap, col("cid")), s * PqSub, books(s))
-        .as(s"c$s")
-    }
     val enc = eWide
       .withColumn("cid", ivfAssign(cents.toSeq, col("x")))
       .select(
         Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-          col("cid")) ++ codes: _*)
+          col("cid")) ++
+          Pq.encode(col("x"), Pq.centroid(cents), books, Pq.Raw): _*)
     val qe = e.join(broadcast(qsel), Seq("vec_id"))
     val qs = qe.select(col("vec_id").as("query_id"), col("x").as("qx"))
     val probes = qe
@@ -4916,23 +4722,12 @@ object Similarity {
         explode(transform(
           slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
           s => -s("ncid"))).as("pcid"))
-    // native dot kernels: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan;
-    // the offset form skips the per-(pair × subspace) slice allocation
-    val adcTerms =
-      graft.functions.DotProduct.dot_product(
-        col("qx"), element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
     val k = TopK.toLong
     val scored = enc
       .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("cid"),
         cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
+        Pq.adc(col("qx"), books, Pq.Raw, Some(Pq.centroid(cents))).as("adc"))
       .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
         col("query_id") === col("p_qid") && col("cid") === col("pcid"),
         "left_outer")

@@ -17,11 +17,11 @@ object VectorKernels {
   /** Dot product in index order (bit-equal to zip_with+aggregate).
     * EQUAL-LENGTH precondition (also [[sqDist]] and the offset
     * variants): on mismatched lengths these kernels truncate to the
-    * shorter side where the zip_with HOF form returned NULL — every
-    * call site uses fixed Dim/PqSub geometry where lengths always
-    * match; a new call site without that guarantee must check lengths
-    * itself or it gets a silently truncated sum where NULL was the
-    * old signal. */
+    * shorter side where the zip_with HOF form returned NULL. The PQ
+    * paths go through `graft.ext.Pq`, which rejects a book that does
+    * not fit its space when the Column is built; any other call site
+    * must check lengths itself or it gets a silently truncated sum
+    * where NULL was the old signal. */
   def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0.0
@@ -78,8 +78,8 @@ object VectorKernels {
     * elements, same fold order) without materializing the slice.
     * Equal-length precondition as [[dot]]: when fewer than |b|
     * elements remain past `off`, the sum silently truncates where the
-    * zip_with HOF form would have returned NULL — callers use fixed
-    * Dim/PqSub geometry where the slice always fits. */
+    * zip_with HOF form would have returned NULL (`graft.ext.Pq`
+    * checks its books' widths before building this). */
   def dotOff(a: ArrayData, off: Int, b: ArrayData): Double = {
     val n = math.min(a.numElements() - off, b.numElements())
     var s = 0.0

@@ -95,4 +95,31 @@ class BenchSpec extends SparkSpec {
       steady = Map("q" -> 0.05))
     assert(fixed("q") == 1.1, "a slower retry must never worsen the record")
   }
+
+  test("a throwing query gets no time and drops out of the results") {
+    // a failure's time-to-failure must never read as a (fast) time:
+    // it is excluded from min-of-reps and from the total, and main
+    // lists it under "failed"
+    val throwsAtBuild =
+      (_: org.apache.spark.sql.SparkSession, _: String) =>
+        throw new IllegalStateException("plan construction failed")
+    val throwsAtRun = (s: org.apache.spark.sql.SparkSession, _: String) =>
+      s.range(1).selectExpr("raise_error('query failed')")
+    assert(Bench.timeOnce(spark, sf001, throwsAtBuild).isEmpty)
+    assert(Bench.timeOnce(spark, sf001, throwsAtRun).isEmpty)
+    assert(Bench.timeOnce(spark, sf001, instant).isDefined)
+    val times = Bench.runSuite(spark, sf001,
+      Map("build" -> throwsAtBuild, "run" -> throwsAtRun, "fine" -> instant),
+      reps = 2, repCap = 60.0)
+    assert(times.keySet == Set("fine"),
+      s"only the clean query is timed: $times")
+    // a flagged query whose retry throws leaves the results too
+    val (fixed, flagged) = Bench.retryOutliers(spark, sf001,
+      Map("flaky" -> throwsAtRun, "fine" -> instant),
+      Map("flaky" -> 9.0, "fine" -> 0.4), repCap = 60.0,
+      steady = Map("flaky" -> 1.0, "fine" -> 0.5))
+    assert(flagged.keySet == Set("flaky"))
+    assert(fixed == Map("fine" -> 0.4),
+      s"a failed retry must not keep a time: $fixed")
+  }
 }

@@ -3,6 +3,7 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Invariants for the q277/q278/q279 index-as-artifact family that
   * the row-hash oracle can't express:
@@ -19,16 +20,17 @@ import org.apache.spark.sql.functions._
   *  - q279's sampled-GT numbers must be internally consistent with
   *    its full-GT columns.
   */
-class IndexArtifactSpec extends SparkSpec {
+class IndexArtifactSpec extends SparkSpec with BeforeAndAfterAll {
+  import IndexArtifact.deleteRecursively
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+  /** Generations are addressed by a fingerprint of the corpus, not of
+    * the code: a generation left by an older build would be served and
+    * the build paths under test would never run. Start from empty
+    * roots, the standing one included. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Seq(IndexArtifact.artifactRoot(sf001), IndexArtifact.standingRoot(sf001))
+      .foreach(r => deleteRecursively(java.nio.file.Paths.get(r)))
   }
 
   test("q278: served rows equal q273's inline raw arm") {
@@ -79,8 +81,7 @@ class IndexArtifactSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     val persisted = IndexArtifact.readEncoded(spark,
         s"${IndexArtifact.currentDir(spark, sf001)}/encoded")
-      .select((Seq("vec_id", "cid") ++
-        (0 until Similarity.PqM).map(s => s"c$s")).map(col): _*)
+      .select(Seq(col("vec_id"), col("cid")) ++ Pq.codeCols(Pq.Raw): _*)
       .collect().map(_.toSeq).toSet
     assert(fresh == persisted,
       "the artifact's encoded rows must equal the frozen-encode kernel")
